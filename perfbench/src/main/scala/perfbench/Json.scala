@@ -1,0 +1,23 @@
+package perfbench
+
+/** Just enough JSON writing for the result line and the trace file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A number with all its digits; non-finite values become null. */
+  def num(d: Double): String =
+    if (d.isNaN || d.isInfinite) "null"
+    else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
+    else d.toString
+
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
+}
