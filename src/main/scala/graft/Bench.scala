@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and total
   * seconds.
@@ -16,20 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.core.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "graft-bench")
 
     // each query's GlobalRank layout checkpoints live in a per-query
     // owner scope, freed deterministically at the query boundary (the
@@ -46,7 +31,7 @@ object Bench {
     // billed to whichever query happens to run first. The SHARED list —
     // the audit sweeps warm with the same queries, keeping catalog and
     // preflight timings comparable.
-    graft.AllowlistedSweep.WarmupQueries.foreach { q =>
+    PreflightSweep.WarmupQueries.foreach { q =>
       try materialize(q) catch { case _: Throwable => () }
     }
 

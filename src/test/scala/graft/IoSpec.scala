@@ -26,6 +26,18 @@ class IoSpec extends SparkSpec {
       "STATIC").equalsIgnoreCase("static"))
   }
 
+  test("partitioned overwrite replaces every partition, not only touched ones") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_spo").toString + "/t"
+    ParquetSink.overwrite(Seq((1, "a"), (2, "b")).toDF("id", "gp"), dir,
+      Seq("gp"))
+    ParquetSink.overwrite(Seq((9, "a")).toDF("id", "gp"), dir, Seq("gp"))
+    val back = spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[String]("gp"))).toSet
+    // a session-wide dynamic overwrite mode would leave stale partition b
+    assert(back == Set((9, "a")))
+  }
+
   test("writeSorted clusters by range and sorts within files; compact merges small files") {
     import spark.implicits._
     import org.apache.spark.sql.functions.input_file_name

@@ -107,13 +107,6 @@ class PlanSpec extends SparkSpec {
 
   test("RowNumberToTopK rule rewrites the window top-k idiom to the custom plan") {
     import org.apache.spark.sql.expressions.Window
-    val spark2 = spark
-    if (!spark2.experimental.extraOptimizations
-        .contains(graft.plans.TopKPerKey.RowNumberToTopK)) {
-      spark2.experimental.extraOptimizations =
-        spark2.experimental.extraOptimizations :+
-          graft.plans.TopKPerKey.RowNumberToTopK
-    }
     val orders = graft.core.Tables.orders(spark, sf)
       .select("o_custkey", "o_orderkey", "o_totalprice")
     val w = Window.partitionBy(col("o_custkey"))
@@ -149,7 +142,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("custom dot_f expression is SQL-addressable after registration") {
-    graft.functions.VectorExpressions.register(spark)
+    // registered once, by GraftExtensions at session build
     graft.queries.SqlQueries.registerViews(spark, sf)
     val row = spark.sql(
       """SELECT vec_id, dot_f(embedding, embedding) AS selfdot
@@ -289,7 +282,7 @@ class PlanSpec extends SparkSpec {
 
   test("hashed linear scoring is narrow: no hash shuffle") {
     val p = plan(SparkEntry.queries("ml1_linear_score")(spark, sf))
-    // docsSpread's round-robin spread is the only exchange — the scoring
+    // the Tables.spread round-robin is the only exchange — the scoring
     // fold itself never shuffles
     assert(!p.contains("Exchange hashpartitioning"), p.take(2000))
   }
@@ -435,11 +428,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("CDC chunking stays narrow until the chunk-digest rollup — no joins") {
-    // the shared test session has no GraftExtensions; expose the hash
-    // kernel the chunker's selectExpr references
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix60",
-      exprs => graft.functions.Md5Prefix60(exprs.head), "built-in")
     val p = plan(SparkEntry.queries("dd15_cdc_chunking")(spark, sf))
     // cut detection + slicing are per-row array HOFs; the only wide ops
     // are the digest aggregate's exchanges — any Join in the plan means
@@ -488,7 +476,7 @@ class PlanSpec extends SparkSpec {
   test("trained-weight scoring is a zero-shuffle scan like ml1") {
     val p = plan(SparkEntry.queries("ml14_trained_score")(spark, sf))
     // the weight array is a plan literal: no join, no vocabulary shuffle;
-    // the only exchange is the docsSpread repartition
+    // the only exchange is the Tables.spread repartition
     assert(!p.contains("Join"), p.take(2000))
     assert(p.sliding("Exchange".length).count(_ == "Exchange") <= 2,
       p.take(2000))

@@ -12,21 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // same extension tier as the product session (GraftSession.local):
-      // SQL-registered kernels (md5_prefix60 …) + custom planner
-      // strategies resolve in specs that sweep the whole catalog
-      .config("spark.sql.extensions",
-        classOf[graft.core.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the product session factory itself, so specs see exactly the confs
+  // and extensions (SQL kernels, TopKPerKey planning) every main runs with
+  lazy val session: SparkSession = graft.core.GraftSession.local("4", "graft-test")
 }

@@ -1,8 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate SCALING_BASELINE.json from one or more sweep logs.
 
-The cross-SF sweep (graft.PreflightSweep, previously graft.ScalingAudit)
-prints one `TIMING <name> tA=<s> tB=<s> ratio=<r>` line per query (plus
+The cross-SF sweep (graft.PreflightSweep) prints one `TIMING <name> tA=<s> tB=<s> ratio=<r>` line per query (plus
 `SUPERLINEAR <name> ...` flags). Preflight keeps its full log at
 /tmp/preflight_full*.log; this script harvests sweep logs into the
 committed baseline artifact so next round's ratio diffs compare files,
@@ -38,48 +37,35 @@ ap.add_argument("--sfA", default="/root/testdata/sf0.001")
 ap.add_argument("--sfB", default="/root/testdata/sf0.01")
 ap.add_argument("--ratio", type=float, default=10.0)
 ap.add_argument("--floor", type=float, default=2.0)
-ap.add_argument("--timing-protocol",
-                default="query construction + executedPlan.execute()"
-                        ".count() (PreflightSweep — construction inside "
-                        "the clock, so eager-construction queries are "
-                        "covered)",
-                help="what the harvested TIMING lines actually measured "
-                     "— pass explicitly when harvesting a "
-                     "graft.ScalingAudit spot-sweep log (noop-sink "
-                     "materialization), or the artifact records a "
-                     "protocol the timings did not come from")
-ap.add_argument("--expect-marker", default="construction+execute_count",
-                help="TIMING_PROTOCOL marker the sweep mains stamp in "
-                     "their logs (PreflightSweep: "
-                     "construction+execute_count; ScalingAudit: "
-                     "construction+noop_sink). A log whose marker "
-                     "MISMATCHES is refused — min-over-logs mixing "
-                     "clock shapes would silently drag eager-"
-                     "construction queries' minima toward an "
-                     "execution-only reading while the protocol field "
-                     "claims otherwise. A log with TIMING lines but NO "
-                     "marker (pre-round-12) only warns.")
 args = ap.parse_args()
 
-# validate protocol markers BEFORE harvesting (round-11 advice): each
-# sweep main prints one `TIMING_PROTOCOL <marker>` line; refuse
-# mismatched logs, warn on legacy marker-less ones
+# What PreflightSweep's TIMING lines measure, and the TIMING_PROTOCOL
+# marker it stamps in its log for that clock shape.
+TIMING_PROTOCOL = ("query construction + executedPlan.execute().count() "
+                   "(PreflightSweep — construction inside the clock, so "
+                   "eager-construction queries are covered)")
+EXPECT_MARKER = "construction+execute_count"
+
+# validate protocol markers BEFORE harvesting: refuse a log whose
+# TIMING_PROTOCOL marker is not PreflightSweep's — min-over-logs mixing
+# clock shapes would silently drag eager-construction queries' minima
+# toward an execution-only reading while the protocol field claims
+# otherwise. A log with TIMING lines but NO marker (pre-round-12) only
+# warns.
 for log in args.logs:
     text = open(log).read()
     markers = set(re.findall(r"^TIMING_PROTOCOL (\S+)", text, re.M))
     has_timings = re.search(r"^TIMING \S+ tA=", text, re.M) is not None
-    bad = markers - {args.expect_marker}
+    bad = markers - {EXPECT_MARKER}
     if bad:
         raise SystemExit(
             f"{log}: TIMING_PROTOCOL {sorted(bad)} != expected "
-            f"'{args.expect_marker}' — refusing to min-merge timings "
-            "measured under a different clock shape (pass "
-            "--expect-marker/--timing-protocol for a deliberate "
-            "non-default harvest)")
+            f"'{EXPECT_MARKER}' — refusing to min-merge timings "
+            "measured under a different clock shape")
     if has_timings and not markers:
         print(f"warning: {log} carries TIMING lines but no "
               "TIMING_PROTOCOL marker (pre-round-12 log?) — verify it "
-              f"was measured as '{args.expect_marker}' before trusting "
+              f"was measured as '{EXPECT_MARKER}' before trusting "
               "the merged minima")
 
 rows, flags, seen = {}, [], {}
@@ -124,7 +110,7 @@ doc = {
     "sfB": args.sfB,
     "protocol": f"min over {len(args.logs)} sweep log(s); one JVM, AQE "
                 "off, 3 warm-up queries per SF; timing = "
-                f"{args.timing_protocol}; flags "
+                f"{TIMING_PROTOCOL}; flags "
                 "re-timed min-of-two before counting"
                 + (f"; {len(partial)} queries present in fewer logs "
                    "(single-sample for those)" if partial else ""),
